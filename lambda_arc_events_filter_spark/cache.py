@@ -45,7 +45,7 @@ def bounded_put(
 #: it must be dropped too — a cached JVM logical plan holds a strong
 #: reference to the index's LogicalRDD, and without this coupling the
 #: plan cache (bound 1024) would pin the executor blocks of indexes long
-#: after their own caches (bound 4) let go (round-8 review finding).
+#: after their own caches (bound 4) let go.
 #: Entries are dicts keyed by (applicationId, sf_dir, ...) tuples.
 PLAN_CACHE_SINKS: list[dict] = []
 
@@ -75,11 +75,11 @@ def release_plans_for(evicted_key) -> None:
 #: engine's architecture (build once per session, probe many times —
 #: reuse is the point), while any OTHER checkpointed RDD in a query plan
 #: is a query-private intermediate whose reuse across executions is
-#: result caching and fakes the benchmark (see registry.register).  The
+#: result caching and fakes the benchmark (see registry._PLAN_CACHE).  The
 #: applicationId in the key matters: RDD ids restart at 0 with every new
 #: SparkContext, so a bare-id set would let a stale blessing from a
-#: stopped session admit a new session's private checkpoint (round-8
-#: review finding).  Insertion-ordered dict → FIFO trim of the OLDEST
+#: stopped session admit a new session's private checkpoint.
+#: Insertion-ordered dict → FIFO trim of the OLDEST
 #: blessings only (a live index re-blesses nothing, but FIFO can at
 #: worst demote an old index's consumers to uncached — never admit a
 #: private RDD).

@@ -249,10 +249,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[table]).parquet(_ingested_path(sf_dir, table))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def values_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Tiny literal dimension as a SQL ``VALUES`` LocalRelation.
 
@@ -262,7 +258,7 @@ def values_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
     ~0.3 s of pure dispatch per execution of ``partitioned_sink_dpp``
     before r14), and the embedded ``LogicalRDD`` excludes the calling
     query from the prepared-plan cache (unblessed RDD scan — see
-    ``registry.register``).  A ``VALUES`` relation analyzes to a
+    ``registry._PLAN_CACHE``).  A ``VALUES`` relation analyzes to a
     ``LocalRelation`` instead: the broadcast is built driver-side with no
     job at all, and the plan is cacheable.  The relation IS configuration
     (literals baked into the plan), exactly like ``_ring_points``.

@@ -224,9 +224,9 @@ def global_order_stats(
     ``materialize=False`` skips the derived-input localCheckpoint
     (``_materialize_if_derived``): the helper's three input evaluations
     then run as a concurrent plan diamond instead of build-then-probe.
-    Since the round-8 plan-cache guard, an embedded checkpoint also makes
-    the whole query ineligible for the prepared-plan cache (a private
-    materialization must re-build per execution), which flips the
+    An embedded checkpoint also makes the whole query ineligible for
+    the prepared-plan cache (a private materialization must re-build
+    per execution), which flips the
     economics for callers whose upstream is one cheap rollup — measured
     on pareto-abc at sf0.1: 0.78 s honest checkpoint-per-rep vs 0.35 s
     checkpoint-free prepared.  Keep the default for derived inputs that

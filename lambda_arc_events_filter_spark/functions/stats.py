@@ -127,9 +127,9 @@ def group_percentile_cont(
     the lever only trims the small reduce-side re-aggregations; it stays
     off by default (the checkpoint barrier serializes stages that
     otherwise run concurrently, and an embedded checkpoint disqualifies
-    the caller from the prepared-plan cache).  Callers that enable it
-    must register with ``plan_cache=False`` (the cached logical plan
-    would pin the checkpointed RDD — result caching, not benchmarking).
+    the caller from the prepared-plan cache).  The checkpoint is eager,
+    so it submits a job at build, and the cache never keeps a plan
+    whose build ran a job.
     """
     import os
 

@@ -149,17 +149,6 @@ def shingle_postings(
     return post
 
 
-def jaccard_expr(a: str, b: str) -> Column:
-    """Exact Jaccard similarity of two distinct-element array columns.
-    Two empty sets define J = 0 here (not NaN): empty docs are never
-    near-duplicates of anything."""
-    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
-    denom = F.size(F.col(a)) + F.size(F.col(b)) - inter
-    return F.when(denom > 0, (inter / denom).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def _hot_posting_keys(post: DataFrame, max_doc_freq: int) -> DataFrame:
     """Posting keys whose document frequency exceeds ``max_doc_freq``.
 

@@ -690,10 +690,9 @@ def kmeans_lloyd(
     # the input so rounds 2..n read executor-local blocks instead of
     # re-running the parquet scan each round (the same multi-pass move the
     # dedup postings use) — worth it for many-iteration cluster runs.
-    # Default FALSE because it is unsafe under the prepared-plan cache:
-    # a cached plan would bake in the checkpointed RDD and repeat
-    # executions would skip the corpus scan entirely (result caching —
-    # see registry.register); opting in requires plan_cache=False.
+    # Default FALSE: the eager checkpoint submits a job at build, and the
+    # prepared-plan cache never keeps a plan whose build ran a job, so
+    # opting in costs the caller its cached plan.
     if materialize:
         emb = emb.localCheckpoint()
     # In-row argmin: the k centroids broadcast as ONE row carrying an

@@ -339,7 +339,6 @@ _PAIR_CTE = """
     FROM reach GROUP BY src
     """,
     tags=("llm", "curation", "dedup"),
-    plan_cache=False,  # iterative: checkpoints label relation per round
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: transitive closure over the exact
@@ -765,10 +764,6 @@ def _semdedup_index(
     GROUP BY m.cluster, acc.n_dup_pairs, acc.n_pruned
     """,
     tags=("llm", "vector", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
@@ -1003,7 +998,6 @@ def corpus_filter_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY cluster_id
     """,
     tags=("llm", "curation", "dedup"),
-    plan_cache=False,  # builds on the iterative CC labels (checkpointed)
 )
 def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The step after clustering that an actual dedup WRITER executes:
@@ -1063,10 +1057,6 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE c * 1.0 / least(nx.n, ny.n) >= 0.9
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-CONTAINMENT pairs: shared-shingle count normalized by the
@@ -1134,10 +1124,6 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg GROUP BY degree
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the near-dup pair graph (Jaccard ≥ 0.5
@@ -1195,10 +1181,6 @@ def dedup_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the near-dup graph: counts a<b<c node triples
@@ -1282,10 +1264,6 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN pair_mix m USING (source)
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplication accountability per source: what fraction of each
@@ -1378,10 +1356,6 @@ def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY node
     """,
     tags=("llm", "curation", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop neighborhood size per document in the near-dup graph: how
@@ -2529,7 +2503,6 @@ def _ess_islands_report(marked: DataFrame) -> DataFrame:
         dup_frac=round_int_ratio_sql("sum(e2 - s + 1)", "min(n_tokens)", 6)
     ),
     tags=("llm", "curation", "dedup", "streaming"),
-    plan_cache=False,  # drives a real stream + mutates the index artifact
 )
 def stream_dedup_exact_substring(
     spark: SparkSession, sf_dir: str

@@ -130,10 +130,6 @@ _JACCARD_ORACLE = """
     "dedup_ngram_jaccard",
     oracle=_JACCARD_ORACLE,
     tags=("llm", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram-shingle Jaccard near-dup pairs (threshold 0.5), blocked
@@ -169,10 +165,6 @@ _JACCARD_ORACLE_UNBLOCKED = """
     "dedup_minhash_lsh",
     oracle=_JACCARD_ORACLE_UNBLOCKED,
     tags=("llm", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B61 MinHash+LSH near-dup detection, exact-verified.
@@ -203,11 +195,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_lsh_capped",
     oracle=_JACCARD_ORACLE_UNBLOCKED,
     tags=("llm", "dedup"),
-    # The CAPPED signature set is rebuilt + checkpointed per call (the
-    # cap filters the signature input, so it cannot share the uncapped
-    # index) — the registry guard therefore declines to cache this plan
-    # whatever the flag says; keep the explicit opt-out as documentation.
-    plan_cache=False,
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH with the posting-frequency cap engaged (max_doc_freq=500):
@@ -239,10 +226,6 @@ _JACCARD_ORACLE_APPEND = _JACCARD_ORACLE_UNBLOCKED.replace(
     "dedup_minhash_incremental",
     oracle=_JACCARD_ORACLE_APPEND,
     tags=("llm", "dedup", "incremental"),
-    # snapshot index artifacts are rebuilt + localCheckpointed per call
-    # (no session-blessed residency), so the registry guard declines the
-    # prepared plan; explicit opt-out as documentation.
-    plan_cache=False,
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash-LSH dedup on corpus APPEND — the dedup twin
@@ -441,7 +424,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5
     """,
     tags=("llm", "similarity", "incremental"),
-    plan_cache=False,
 )
 def ann_ivf_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance on corpus APPEND — the
@@ -462,8 +444,7 @@ def ann_ivf_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisting (sum, count) rather than the rounded centroid is the
     design point: rounded means cannot absorb an append, while
     sufficient statistics merge associatively with any number of deltas
-    and re-derive exactly the rebuild's rounded means.  plan_cache=False:
-    the fn materializes the snapshot artifacts via localCheckpoint.
+    and re-derive exactly the rebuild's rounded means.
     """
     e = load(spark, sf_dir, "embeddings")
     snap = e.filter(F.col("vec_id") % 5 != 0)
@@ -658,15 +639,6 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, term, tf, df, tfidf, rn FROM r WHERE rn <= 3
     """,
     tags=("llm", "text"),
-    # plan_cache=True (round-8 flip, VERDICT r7 ask #7): the prepared
-    # plan pins the checkpointed tf-index lineage, but Dataset.ofRows
-    # re-plans physically and RE-EXECUTES every probe stage per call —
-    # verified same-session at sf0.1: prepared+collect 0.122 s ≈
-    # collect-only 0.106 s + replan, vs 0.171 s paying the py4j fn()
-    # rebuild per rep.  Reusing a deliberately-resident index is the
-    # engine's architecture, not result caching; only the client-side
-    # plan construction is skipped, which is exactly the
-    # prepared-statement protocol the cache documents.
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B65 TF-IDF via explicit DataFrame math (operators/text.py) — chosen
@@ -1714,10 +1686,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 10000 * c * c >= 6400 * nx.n * ny.n
     """,
     tags=("llm", "dedup"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def dedup_prefix_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H2: exact cosine ≥ 0.8 near-dup pairs over 3-gram shingle SETS via
@@ -2656,7 +2624,6 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
     # exact per-doc ratios are pinned by
     # tests/test_llm.py::test_compressibility_matches_direct_zlib
     tags=("llm", "text", "udf"),
-    plan_cache=False,
 )
 def text_compressibility_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compression-ratio quality screening (the Gopher/MassiveText

@@ -43,10 +43,6 @@ from lambda_arc_events_filter_spark.registry import register
     LIMIT 100
     """,
     tags=("llm", "curation"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary head: top-100 terms by total frequency, with
@@ -90,10 +86,6 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY t.doc_id
     """,
     tags=("llm", "curation"),
-    # plan_cache=True since round 8: the probed session index is BLESSED
-    # (cache.bless_resident), so the registry guard admits the prepared
-    # plan; every probe stage still re-executes per call — only the
-    # client-side plan rebuild is skipped (prepared-statement protocol).
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
@@ -1351,7 +1343,6 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM walk WHERE root_id IS NOT NULL
     """,
     tags=("graph", "iterative"),
-    plan_cache=False,  # pointer-doubling rounds checkpoint per round
 )
 def hierarchy_doc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchy closure without a recursive CTE: documents arranged in a

@@ -1811,7 +1811,6 @@ _HAV_SQL = """2 * 6371.0 * asin(sqrt(least(1.0,
     LEFT JOIN border bo ON bo.node = p.user_id
     """.format(pts=_PTS_SQL, hav=_HAV_SQL),
     tags=("geo", "ml", "graph"),
-    plan_cache=False,  # iterative CC checkpoints a label relation
 )
 def users_geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN (eps = 200 km, minPts = 4 incl. self) over the user point

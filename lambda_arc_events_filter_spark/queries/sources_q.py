@@ -1053,7 +1053,6 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM doubling, n
     """,
     tags=("sql", "frontdoor", "iterative"),
-    plan_cache=False,  # fn runs the script and materializes rows per call
 )
 def sql_scripting_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL scripting (Spark 4 ``BEGIN … END`` procedural blocks): a
@@ -1277,7 +1276,6 @@ _RECURSIVE_BFS_SQL = """
         nation="nation",
     ),
     tags=("sql", "graph"),
-    plan_cache=False,  # resolves temp views by name
 )
 def sql_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4 ``WITH RECURSIVE``) breadth-first search

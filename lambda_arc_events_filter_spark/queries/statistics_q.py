@@ -4517,7 +4517,6 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p3.brand
     """,
     tags=("stats", "iterative", "agg"),
-    plan_cache=False,  # checkpoints the comparison matrix (see docstring)
 )
 def parts_bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bradley-Terry (1952) pairwise-preference strength per brand, fit
@@ -4583,8 +4582,8 @@ def parts_bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤ |brands|² rows; EVERY downstream relation (qual, opp, wins,
     # games, 3 MM rounds) re-reads it, so without this checkpoint the
     # fact-scale pair generation would re-execute once per consumer
-    # (measured 50 s → ~3 s at sf0.01).  plan_cache=False above: the
-    # cached plan would pin this materialized RDD.
+    # (measured 50 s → ~3 s at sf0.01).  The unblessed checkpoint keeps
+    # this plan out of the prepared-plan cache.
     c = comp.groupBy(
         F.col("g.w").alias("w"), F.col("g.l").alias("l")
     ).agg(F.count(F.lit(1)).alias("c")).localCheckpoint(eager=False)

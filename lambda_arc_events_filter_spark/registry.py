@@ -17,6 +17,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lambda_arc_events_filter_spark.cache import (
+    PLAN_CACHE_SINKS,
+    bounded_put,
+    has_unresolved_relations,
+    is_blessed,
+    rdd_scan_ids,
+)
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -32,30 +40,34 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 #: Prepared-statement cache: (applicationId, sf_dir, query name) → JVM
-#: logical plan.  Building a query through the Python DataFrame API costs
-#: 0.15-0.25 s of py4j round-trips (one per Column expression) — pure
-#: client-side constant overhead a resident engine pays once.  We cache the
-#: OPTIMIZED logical plan (``qe.optimizedPlan()``, r10; analyzed in r8-9,
-#: raw before that) and wrap it in a fresh QueryExecution per call
-#: (``Dataset.ofRows``), so every execution re-plans physically and
-#: re-runs all stages — measured (r9, agg_stats): prepared-plan collect
-#: 0.546 s vs same-DataFrame re-collect 0.042 s, so no stage output is
-#: reused (result caching, NOT what a benchmark may skip).  Each caching
-#: step is provably equivalent and measured: raw→analyzed (r8 ask #3)
-#: saved the 9-48 ms/query analyzer batches (agg_stats 122→74 ms
-#: plan-only), analyzed→optimized (r10) saves the optimizer fixed-point
-#: re-derivation (per-execution toPandas: fn_string_suite 0.184→0.157 s,
-#: agg_stats 1.068→1.030 s), with optimizer idempotency proven by the
-#: SPARK_GRAFT_CHECK_REUSE=1 whole-registry oracle sweep
-#: (SWEEP_r10_reuse.txt) plus a per-plan-shape pytest.  Analysis and
-#: optimization are deterministic given the session conf, and plans that
-#: resolve BY NAME (temp views, the one mutable input to analysis) are
-#: never cached; the check runs on the RAW plan, where a view reference
-#: is still visible as an UnresolvedRelation.
-#: Queries tagged streaming/source/sink are exempt: their fn performs the
-#: actual run/write per call.  Bounded (cache.bounded_put): FIFO-evicted
-#: past _PLAN_CACHE_MAX entries so a long-lived session over many sf_dirs
-#: cannot grow driver memory without limit.
+#: optimized logical plan.  Building a query through the Python DataFrame
+#: API costs 0.06-0.6 s of py4j round-trips (one per Column expression),
+#: a client-side constant a resident engine pays once.  A replay wraps
+#: the cached plan in a fresh QueryExecution (``Dataset.ofRows``), so
+#: every execution re-plans physically and re-runs every stage: no stage
+#: output or result is reused.  Optimizer idempotency over the whole
+#: registry is checked by the ``SPARK_GRAFT_CHECK_REUSE=1`` oracle sweep,
+#: which checks the replayed execution.
+#:
+#: A plan is cached only when its build did no per-call work, which
+#: ``_with_prepared_plan`` checks after each uncached build:
+#:
+#: - the build submitted no Spark job.  A write, a stream run, an eager
+#:   checkpoint or a collected literal each submit one, and a replay
+#:   would skip that work.  An index build submits jobs on its first
+#:   call only, so such a query is cached from its second call;
+#: - the RAW plan names no relation (``cache.has_unresolved_relations``):
+#:   a temp view is global mutable state, so a replay could read another
+#:   dataset after the view is re-registered;
+#: - every RDD scan of the ANALYZED plan, subqueries included, is a
+#:   blessed session-resident index of this application
+#:   (``cache.bless_resident``).  Any other ``LogicalRDD``, such as a lazy
+#:   ``localCheckpoint(eager=False)`` or a ``createDataFrame``, holds
+#:   per-call data.
+#:
+#: Bounded (``cache.bounded_put``): FIFO-evicted past ``_PLAN_CACHE_MAX``
+#: entries so a long-lived session over many sf_dirs cannot grow driver
+#: memory without limit.
 _PLAN_CACHE: dict[tuple[str, str, str], object] = {}
 _PLAN_CACHE_MAX = 1024
 
@@ -63,99 +75,50 @@ _PLAN_CACHE_MAX = 1024
 # cache, cache.release_plans_for drops every prepared plan of the same
 # (applicationId, sf_dir) — otherwise cached plans would pin the evicted
 # index's LogicalRDD (and its executor blocks) for the session lifetime.
-from lambda_arc_events_filter_spark.cache import PLAN_CACHE_SINKS, bounded_put
-
 PLAN_CACHE_SINKS.append(_PLAN_CACHE)
-#: applicationId → cached ``Dataset.ofRows`` py4j handle (see rebuild path).
+#: applicationId → cached ``Dataset.ofRows`` py4j handle: one
+#: JVM-reflection walk per session, not per replay.
 _OF_ROWS: dict[str, object] = {}
-_NO_PLAN_CACHE_TAGS = frozenset({"streaming", "source", "sink"})
 
 
-def _with_plan_cache(name: str, fn: QueryFn) -> QueryFn:
+def _with_prepared_plan(name: str, fn: QueryFn) -> QueryFn:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = None
-        jplan = None
         try:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            jplan = _PLAN_CACHE.get(key)
-            if jplan is None:
-                from lambda_arc_events_filter_spark.cache import (
-                    has_unresolved_relations,
-                    is_blessed,
-                    rdd_scan_ids,
-                )
-
-                df = fn(spark, sf_dir)
-                qe = df._jdf.queryExecution()
-                # Cache ONLY plans that are (a) free of by-NAME relation
-                # references in their RAW form — a temp view is global
-                # mutable state, so a cached plan re-resolving the name
-                # per execution could silently read another dataset
-                # after the view is re-registered, or die on a dropped
-                # per-call view — and (b) whose RDD scans (incl. those
-                # inside subquery expressions) are all blessed
-                # session-resident indexes OF THIS APPLICATION
-                # (cache.bless_resident).  Any other LogicalRDD — a
-                # query-private localCheckpoint, a driver-computed
-                # createDataFrame — is per-execution work; caching it
-                # would convert the prepared-statement protocol into
-                # result caching (round-8 audit: 48 registrations
-                # carried this leak).  The RDD scan walks the ANALYZED
-                # plan (in the raw plan a view name can hide a
-                # checkpointed relation); the by-name check walks the
-                # RAW plan (analysis inlines views, hiding the
-                # reference).  Scan failures fail CLOSED (no caching).
-                try:
-                    cacheable = not has_unresolved_relations(
-                        qe.logical()
-                    ) and is_blessed(key[0], rdd_scan_ids(qe.analyzed()))
-                except Exception:
-                    cacheable = False
-                if cacheable:
-                    # Cache the OPTIMIZED plan (round 10): re-execution
-                    # still re-plans physically and re-runs every stage
-                    # (no stage-output or result reuse — the protocol
-                    # line), but the optimizer fixed-point over an
-                    # already-optimized tree converges in one cheap
-                    # iteration instead of re-deriving every rewrite.
-                    # Measured per-execution (sf0.1, toPandas):
-                    # fn_string_suite 0.184→0.157, agg_stats
-                    # 1.068→1.030, q01 0.191→0.183.  Optimizer
-                    # idempotency over the whole registry is proven by
-                    # the SPARK_GRAFT_CHECK_REUSE=1 sweep, which
-                    # oracle-checks the REUSED execution of the whole
-                    # registry (r10).  The build call executes this same
-                    # QueryExecution anyway, so forcing the lazy
-                    # optimizedPlan here adds no net build cost.
-                    bounded_put(
-                        _PLAN_CACHE,
-                        key,
-                        qe.optimizedPlan(),
-                        _PLAN_CACHE_MAX,
-                    )
-                return df
-            of_rows = _OF_ROWS.get(key[0])
-            if of_rows is None:
-                # one JVM-reflection walk per session, not per call —
-                # the attribute chain costs several py4j round-trips
-                of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-                bounded_put(_OF_ROWS, key[0], of_rows, 8)
-            jds = of_rows(spark._jsparkSession, jplan)
-            return DataFrame(jds, spark)
-        except Exception:  # e.g. Connect-mode session without _jvm
-            # self-repair: a cached plan that can no longer analyze
-            # (dropped view, stopped context) must not poison every
-            # subsequent call with an exception + silent rebuild
-            if key is not None:
-                _PLAN_CACHE.pop(key, None)
-                # Evict the ofRows handle only when the failure was on
-                # the cached-plan REBUILD branch — a first-build failure
-                # inside fn() never touched the handle, and a transient
-                # query error must not cost the whole application its
-                # still-valid JVM reflection handle.
-                if jplan is not None:
-                    _OF_ROWS.pop(key[0], None)  # handle may be stale too
+            app = spark.sparkContext.applicationId
+        except Exception:  # a session without a JVM (Connect): no caching
             return fn(spark, sf_dir)
+        key = (app, sf_dir, name)
+        jplan = _PLAN_CACHE.get(key)
+        if jplan is not None:
+            try:
+                of_rows = _OF_ROWS.get(app)
+                if of_rows is None:
+                    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+                    bounded_put(_OF_ROWS, app, of_rows, 8)
+                return DataFrame(of_rows(spark._jsparkSession, jplan), spark)
+            except Exception:
+                # a cached plan that no longer analyzes (dropped view,
+                # stopped context) is dropped with its handle and rebuilt
+                _PLAN_CACHE.pop(key, None)
+                _OF_ROWS.pop(app, None)
+        # nextJobId is bumped synchronously at job submission; a job from
+        # another thread in this window only costs a missed cache
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs_before = dag.nextJobId()
+        df = fn(spark, sf_dir)
+        if dag.nextJobId() != jobs_before:
+            return df
+        try:
+            qe = df._jdf.queryExecution()
+            if not has_unresolved_relations(qe.logical()) and is_blessed(
+                app, rdd_scan_ids(qe.analyzed())
+            ):
+                # the build executes this QueryExecution anyway, so
+                # forcing its optimized plan here adds no build cost
+                bounded_put(_PLAN_CACHE, key, qe.optimizedPlan(), _PLAN_CACHE_MAX)
+        except Exception:  # a plan walk that fails refuses caching
+            pass
+        return df
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
@@ -167,7 +130,6 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    plan_cache: bool = True,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry.
 
@@ -176,28 +138,20 @@ def register(
     streaming, approximate sketches) — the driver then records a weaker
     rows-only check, and the judge sees which.
 
-    ``plan_cache=False`` opts out of the prepared-plan cache.  Use it for
-    queries whose fn materializes intermediates (``localCheckpoint``) or
-    embeds driver-computed data: the cached logical plan would reference
-    the materialized RDD and repeat executions would skip recomputing it —
-    result caching, which would fake the benchmark.  Since round 8 the
-    wrapper ENFORCES this structurally: a plan whose RDD scans are not all
-    blessed session-resident indexes (``cache.bless_resident``) is never
-    cached, whatever the flag says — the flag remains as documentation and
-    as a way to skip the wrapper entirely.  Streaming/source/sink tags are
-    exempted automatically.
+    The registered fn goes through the prepared-plan cache, which keeps a
+    plan only when its build did no per-call work (see ``_PLAN_CACHE``).
+    The decorator returns the raw fn, so direct calls bypass the cache.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        reg_fn = (
-            fn
-            if not plan_cache or _NO_PLAN_CACHE_TAGS & set(tags)
-            else _with_plan_cache(name, fn)
-        )
         _REGISTRY[name] = QuerySpec(
-            name=name, fn=reg_fn, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or ""
+            name=name,
+            fn=_with_prepared_plan(name, fn),
+            oracle=oracle,
+            tags=tuple(tags),
+            doc=fn.__doc__ or "",
         )
         return fn
 

@@ -6,6 +6,8 @@ silently re-runs the index build it exists to amortize."""
 
 from __future__ import annotations
 
+import pytest
+
 from lambda_arc_events_filter_spark.cache import bounded_put
 
 
@@ -48,35 +50,32 @@ def test_plan_cache_refuses_unblessed_rdd_scans(spark, sf_dir):
     driver-computed createDataFrame) — caching one pins its blocks across
     executions and turns the prepared-statement protocol into result
     caching.  Blessed session-resident indexes (text_index, IVF) remain
-    cacheable (round-8 guard)."""
+    cacheable.  Each query is built twice: a first build that runs a
+    session index build submits jobs and is not cached."""
     from lambda_arc_events_filter_spark import registry as R
 
     all_specs = R.specs()
 
-    def cache_key(name):
-        return (spark.sparkContext.applicationId, sf_dir, name)
+    def cached_after_two_builds(name):
+        all_specs[name].fn(spark, sf_dir)
+        all_specs[name].fn(spark, sf_dir)
+        return (spark.sparkContext.applicationId, sf_dir, name) in R._PLAN_CACHE
 
     # query-private checkpoint (the rank helper's derived-input
     # materialization inside lorenz): never cached
-    all_specs["customer_lorenz_curve"].fn(spark, sf_dir)
-    assert cache_key("customer_lorenz_curve") not in R._PLAN_CACHE
+    assert not cached_after_two_builds("customer_lorenz_curve")
 
-    # pareto dropped its private checkpoint in round 8 (concurrent
-    # diamond) — fully declarative again, so the prepared plan IS cached
-    all_specs["lineitem_pareto_abc"].fn(spark, sf_dir)
-    assert cache_key("lineitem_pareto_abc") in R._PLAN_CACHE
+    # fully declarative (no private checkpoint): cached
+    assert cached_after_two_builds("lineitem_pareto_abc")
 
     # driver-computed input data: never cached
-    all_specs["events_raking_ipf"].fn(spark, sf_dir)
-    assert cache_key("events_raking_ipf") not in R._PLAN_CACHE
+    assert not cached_after_two_builds("events_raking_ipf")
 
     # blessed resident tf index: prepared plan IS cached
-    all_specs["text_tfidf_top_terms"].fn(spark, sf_dir)
-    assert cache_key("text_tfidf_top_terms") in R._PLAN_CACHE
+    assert cached_after_two_builds("text_tfidf_top_terms")
 
-    # plain scan-chain query: cached as before
-    all_specs["agg_stats"].fn(spark, sf_dir)
-    assert cache_key("agg_stats") in R._PLAN_CACHE
+    # plain scan-chain query over its session bounds: cached
+    assert cached_after_two_builds("agg_stats")
 
 
 def test_private_checkpoint_rematerializes_per_call(spark, sf_dir):
@@ -93,23 +92,21 @@ def test_private_checkpoint_rematerializes_per_call(spark, sf_dir):
 
 
 def test_every_headline_query_is_prepared_cacheable(spark, sf_dir):
-    """Bench protection: every HEADLINE query must either ride the
-    prepared-plan cache (its plan's RDD scans are all blessed indexes)
-    or carry a structural exemption (streaming/source/sink tags).  A
-    regression here means some headline fn grew a query-private
-    materialization — its bench reps would silently pay a per-rep py4j
-    rebuild (or worse, before the round-8 guard, reuse results)."""
+    """Bench protection: every HEADLINE query except the stream, whose
+    build runs the stream, must ride the prepared-plan cache by its
+    second call.  A regression here means some headline fn grew
+    query-private work at build (a job, an unblessed materialization),
+    so its bench reps would silently pay a per-rep py4j rebuild."""
     import bench
     from lambda_arc_events_filter_spark import registry as R
 
     sp = R.specs()
-    exempt_tags = R._NO_PLAN_CACHE_TAGS
     failures = []
     for name in bench.HEADLINE:
-        spec = sp[name]
-        if exempt_tags & set(spec.tags):
+        if name == "stream_tumbling_counts":
             continue
-        spec.fn(spark, sf_dir)
+        sp[name].fn(spark, sf_dir)
+        sp[name].fn(spark, sf_dir)
         if (spark.sparkContext.applicationId, sf_dir, name) not in R._PLAN_CACHE:
             failures.append(name)
     assert not failures, (
@@ -223,6 +220,7 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     idx_key = (app, sf_dir)
 
     spec.fn(spark, sf_dir).collect()
+    spec.fn(spark, sf_dir)  # a first build may run the index build
     assert plan_key in R._PLAN_CACHE
     idx_before = TI._TF_IDX[idx_key]
 
@@ -247,4 +245,69 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     assert check_query(spec, spark, con, sf_dir) == []
     con.close()
     assert TI._TF_IDX[idx_key] is not idx_before
+    spec.fn(spark, sf_dir)  # the rebuild above ran index jobs
     assert plan_key in R._PLAN_CACHE
+
+
+def test_every_registered_query_goes_through_the_plan_cache():
+    from lambda_arc_events_filter_spark import registry as R
+
+    assert all(hasattr(s.fn, "__wrapped__") for s in R.specs().values())
+
+
+def test_wrapped_raising_fn_is_called_once(spark):
+    """A build that raises must not be retried: a streaming or sink fn
+    would run its stream or write a second time."""
+    from lambda_arc_events_filter_spark import registry as R
+
+    calls = []
+
+    def boom(spark, sf_dir):
+        calls.append(sf_dir)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        R._with_prepared_plan("_probe_raising", boom)(spark, "unused")
+    assert len(calls) == 1
+
+
+def test_build_that_collects_a_literal_is_not_cached(spark):
+    """A driver-collected value baked into the plan as a literal is
+    per-call data: its build submits a job, so the plan is never kept."""
+    import pyspark.sql.functions as F
+
+    from lambda_arc_events_filter_spark import registry as R
+
+    def fn(spark, sf_dir):
+        top = spark.range(7).agg(F.max("id")).collect()[0][0]
+        return spark.range(10).filter(F.col("id") < F.lit(top))
+
+    wrapped = R._with_prepared_plan("_probe_collect_literal", fn)
+    key = (spark.sparkContext.applicationId, "unused", "_probe_collect_literal")
+    try:
+        assert wrapped(spark, "unused").count() == 6
+        assert wrapped(spark, "unused").count() == 6
+        assert key not in R._PLAN_CACHE
+    finally:
+        R._PLAN_CACHE.pop(key, None)
+
+
+def test_build_that_writes_is_not_cached(spark, tmp_path):
+    """A build that writes parquet and reads it back must write on every
+    call: a cached plan would replay the read and skip the write."""
+    from lambda_arc_events_filter_spark import registry as R
+
+    out = str(tmp_path / "sink")
+
+    def fn(spark, sf_dir):
+        spark.range(3).write.mode("append").parquet(out)
+        return spark.read.parquet(out)
+
+    wrapped = R._with_prepared_plan("_probe_write", fn)
+    key = (spark.sparkContext.applicationId, "unused", "_probe_write")
+    try:
+        wrapped(spark, "unused")
+        assert wrapped(spark, "unused").count() == 6
+        assert key not in R._PLAN_CACHE
+    finally:
+        R._PLAN_CACHE.pop(key, None)

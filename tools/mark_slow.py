@@ -42,7 +42,7 @@ def main() -> int:
     thresh = float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
     entries: list[tuple[float, str]] = []
     for line in open(sys.argv[1]):
-        m = re.match(r"^(\d+\.\d+)s call\s+(\S+)", line)
+        m = re.match(r"^(\d+\.\d+)s call\s+(.+?)\s*$", line)
         if m and float(m.group(1)) >= thresh:
             entries.append((float(m.group(1)), m.group(2)))
     if not entries:
