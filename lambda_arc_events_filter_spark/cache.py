@@ -1,20 +1,31 @@
-"""Bounded driver-side session caches.
+"""Driver-side session state shared by the query modules and the registry.
 
-The engine keeps a handful of process-global caches keyed by Spark
-``applicationId`` (prepared logical plans, the IVF and postings corpus
-indexes, layout-job output paths).  They are correct unbounded — keys
-include the application id, so a dead session's entries are never served —
-but a long-lived driver iterating over many datasets would accumulate
-references without limit.  ``bounded_put`` gives every cache the same
-FIFO bound: oldest insertion evicted first.  Eviction only drops the
-driver-side reference; executor-side blocks (localCheckpoint RDDs) are
-released by the ContextCleaner once the DataFrame is unreachable.
+- **Per-dataset artifacts** (``session_artifact``): everything the engine
+  builds once per (Spark ``applicationId``, ``sf_dir``) and then reuses —
+  corpus indexes (tf, postings, IVF, SemDeDup), layout copies written to
+  scratch (sorted, bucketed, Z-ordered, ...), and small write-once dims.
+  One store, FIFO-bounded at ``_DATASETS_MAX`` datasets: evicting a
+  dataset drops all of its artifacts at once.
+- **Blessed RDD ids** (``RESIDENT_RDD_IDS``): the checkpointed RDDs of
+  those artifacts.  The prepared-plan cache (``registry._PLAN_CACHE``)
+  caches a plan only if every RDD it scans is blessed.
+- **Coupling to the plan cache** (``PLAN_CACHE_SINKS``,
+  ``release_plans_for``): evicting a dataset also drops every prepared
+  plan over it, so no cached plan pins an evicted index's executor
+  blocks.
+
+Keys include the application id, so a dead session's entries are never
+served.  Eviction only drops the driver-side reference; executor-side
+blocks (localCheckpoint RDDs) are released by the ContextCleaner once
+the DataFrame is unreachable.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import TypeVar
+from typing import Any, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
 
 K = TypeVar("K")
 V = TypeVar("V")
@@ -40,26 +51,26 @@ def bounded_put(
     return value
 
 
-#: Plan caches registered for coupled eviction: when a session INDEX is
-#: evicted from its own bounded cache, every prepared plan built against
-#: it must be dropped too — a cached JVM logical plan holds a strong
-#: reference to the index's LogicalRDD, and without this coupling the
-#: plan cache (bound 1024) would pin the executor blocks of indexes long
-#: after their own caches (bound 4) let go.
+#: Plan caches registered for coupled eviction: when a dataset's artifacts
+#: are evicted, every prepared plan built against them must be dropped
+#: too — a cached JVM logical plan holds a strong reference to an index's
+#: LogicalRDD, and without this coupling the plan cache (bound 1024)
+#: would pin the executor blocks of indexes long after the artifact
+#: store (bound ``_DATASETS_MAX``) let go.
 #: Entries are dicts keyed by (applicationId, sf_dir, ...) tuples.
 PLAN_CACHE_SINKS: list[dict] = []
 
 
 def release_plans_for(evicted_key) -> None:
     """Drop every registered prepared plan whose key starts with the
-    evicted index-cache key's (applicationId, sf_dir) prefix.
+    evicted artifact key's (applicationId, sf_dir) prefix.
 
     Deliberately coarse: plans over still-live indexes (and plans with no
     RDD dependency) of the same sf_dir are invalidated too, each paying
     one ~0.2 s re-preparation on its next call.  The safe direction —
     under-caching — is chosen over per-plan dependency tracking because
-    index eviction only happens when a session cycles more sf_dirs than
-    the index bound (4), a maintenance pattern, not a serving one."""
+    eviction only happens when a session cycles more sf_dirs than
+    ``_DATASETS_MAX``, a maintenance pattern, not a serving one."""
     if not (isinstance(evicted_key, tuple) and len(evicted_key) >= 2):
         return
     prefix = evicted_key[:2]
@@ -68,8 +79,8 @@ def release_plans_for(evicted_key) -> None:
             sink.pop(k, None)
 
 
-#: Session-RESIDENT materializations (corpus indexes: the tf index, the
-#: shingle postings, the IVF index), as (applicationId, rdd id) pairs.
+#: Session-RESIDENT materializations (the DataFrame artifacts of
+#: ``session_artifact``), as (applicationId, rdd id) pairs.
 #: The prepared-plan cache may only cache a plan whose RDD scans all
 #: appear here FOR THE CURRENT APPLICATION: a resident index is the
 #: engine's architecture (build once per session, probe many times —
@@ -135,16 +146,45 @@ def is_blessed(app_id: str, rdd_ids: list[int]) -> bool:
     return all((app_id, r) in RESIDENT_RDD_IDS for r in rdd_ids)
 
 
-def bless_resident(df):
+def bless_resident(df) -> None:
     """Mark every RDD scan in ``df``'s plan as session-resident (an index
-    whose cross-execution reuse is intended).  Returns ``df`` so builders
-    can wrap their ``localCheckpoint()`` call site.  No-op on sessions
-    without JVM access (Connect mode)."""
+    whose cross-execution reuse is intended).  No-op on sessions without
+    JVM access (Connect mode)."""
     try:
         app = df.sparkSession.sparkContext.applicationId
         ids = rdd_scan_ids(df._jdf.queryExecution().logical())
     except Exception:
-        return df
+        return
     for r in ids:
         bounded_put(RESIDENT_RDD_IDS, (app, r), None, _RESIDENT_MAX)
-    return df
+
+
+#: (applicationId, sf_dir) → {artifact name → artifact}.
+_ARTIFACTS: dict[tuple[str, str], dict[str, Any]] = {}
+_DATASETS_MAX = 4
+
+
+def session_artifact(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], Any]
+) -> Any:
+    """The ``name`` artifact of dataset ``sf_dir`` in this session, built by
+    ``build()`` on first use and served from the store afterwards.
+
+    Every DataFrame in the result (one DataFrame, or a tuple holding
+    some) is blessed: it is a session index that prepared plans may
+    scan.  Other results (a scratch path, a table name) are stored as
+    they are.  Past ``_DATASETS_MAX`` datasets the oldest dataset is
+    evicted with all its artifacts and the prepared plans over it."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    arts = _ARTIFACTS.get(key)
+    if arts is None:
+        arts = bounded_put(
+            _ARTIFACTS, key, {}, _DATASETS_MAX, on_evict=release_plans_for
+        )
+    if name not in arts:
+        art = build()
+        for df in art if isinstance(art, tuple) else (art,):
+            if isinstance(df, DataFrame):
+                bless_resident(df)
+        arts[name] = art
+    return arts[name]

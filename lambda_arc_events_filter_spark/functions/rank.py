@@ -56,9 +56,8 @@ from pyspark.sql import functions as F
 
 from lambda_arc_events_filter_spark.cache import bounded_put
 
-#: (applicationId, input-plan semanticHash, column, n_bands) → sorted band
-#: boundaries (see functions/stats.py::_BOUNDS_IDX — identical safety
-#: argument: bounds steer balance, never correctness).
+#: (applicationId, input-plan hash, str(value), n) → sorted band
+#: boundaries; see ``band_bounds``.
 _BOUNDS_IDX: dict[tuple[str, int, str, int], list[float]] = {}
 _BOUNDS_IDX_MAX = 64
 
@@ -98,6 +97,30 @@ _NUMERIC_DTYPES = frozenset(
 )
 
 
+def band_bounds(
+    df: DataFrame, value: Column, n: int, plan_hash: int
+) -> list[float]:
+    """Sorted, deduplicated ``i/n`` quantile boundaries of ``value`` over
+    ``df`` (one approxQuantile job, accuracy 0.01; NaN bounds dropped —
+    a NaN makes ``sorted(set(...))`` order-unstable and the band chain
+    non-monotone).
+
+    Memoized per (application, ``plan_hash``, value, n): the bounds only
+    steer band BALANCE, never correctness (any fixed cut points are
+    order-consistent), so serving a stale or colliding entry is safe,
+    and repeat constructions over the same input plan skip the job.
+    ``plan_hash`` is the caller's call-stable input plan hash: a
+    localCheckpointed input gets a fresh plan per call and never hits."""
+    key = (df.sparkSession.sparkContext.applicationId, plan_hash, str(value), n)
+    bounds = _BOUNDS_IDX.get(key)
+    if bounds is None:
+        qs = [i / n for i in range(1, n)]
+        probe = df.select(value.alias("_v")).stat.approxQuantile("_v", qs, 0.01)
+        bounds = sorted({b for b in probe if b == b})
+        bounded_put(_BOUNDS_IDX, key, bounds, _BOUNDS_IDX_MAX)
+    return bounds
+
+
 def _band_column(core: DataFrame, name: str, direction: str, n_bands: int):
     """Band id for the leading order column, or None if not bandable.
 
@@ -118,33 +141,9 @@ def _band_column(core: DataFrame, name: str, direction: str, n_bands: int):
         conv = F.col(name).cast("timestamp").cast("double")
     else:
         return None
-    qs = [i / n_bands for i in range(1, n_bands)]
-    if not qs:
+    if n_bands <= 1:
         return F.lit(0)
-    # session bounds cache, same protocol as functions/stats.py: the
-    # probe only steers band balance (any fixed cuts are order-
-    # consistent), so repeat constructions over the same input plan skip
-    # the approxQuantile job.  Lazily-checkpointed derived inputs get a
-    # fresh plan id per call and simply never hit — scan-chain inputs
-    # (the common consumers) do.
-    key = (
-        core.sparkSession.sparkContext.applicationId,
-        core.semanticHash(),
-        name,
-        n_bands,
-    )
-    bounds = _BOUNDS_IDX.get(key)
-    if bounds is None:
-        bounds = sorted(
-            {
-                b
-                for b in core.select(conv.alias("_v")).stat.approxQuantile(
-                    "_v", qs, 0.01
-                )
-                if b == b  # drop NaN boundaries (all-NaN / empty columns)
-            }
-        )
-        bounded_put(_BOUNDS_IDX, key, bounds, _BOUNDS_IDX_MAX)
+    bounds = band_bounds(core, conv, n_bands, core.semanticHash())
     n = len(bounds)
     asc: Column = F.lit(n)
     for i, b in reversed(list(enumerate(bounds))):

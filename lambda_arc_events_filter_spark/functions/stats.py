@@ -32,8 +32,6 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from lambda_arc_events_filter_spark.cache import bounded_put
-
 #: internal column names the banded-rank plan materializes on the fact
 #: relation (plus ``_rn``/``_n`` from the ``group`` strategy).  Input
 #: columns and caller aliases must not collide — validated up front.
@@ -43,16 +41,6 @@ _RESERVED_NAMES = frozenset(
         "_lo", "_hi", "_frac", "_v", "_v_lo", "_v_hi", "q_alias", "_rn",
     }
 )
-
-#: (applicationId, input-plan semanticHash, value_col, num_partitions) →
-#: sorted band boundaries.  The boundary probe is one approxQuantile job
-#: at plan-construction time; its output only steers band BALANCE, never
-#: correctness (any fixed cut points are order-consistent), so serving a
-#: cached — even colliding — entry is always safe.  Build-once/probe-many
-#: callers (agg_stats, the histogram/PSI family) skip the probe on every
-#: call after the first.
-_BOUNDS_IDX: dict[tuple[str, int, str, int], list[float]] = {}
-_BOUNDS_IDX_MAX = 64
 
 
 def _join_null_safe(
@@ -193,17 +181,13 @@ def group_percentile_cont(
     # materialize derived inputs once (see functions/rank.py)
     from lambda_arc_events_filter_spark.functions.rank import (
         _materialize_if_derived,
+        band_bounds,
     )
 
-    # bounds-cache key BEFORE materialization: a localCheckpoint gets a
+    # bounds memo key BEFORE materialization: a localCheckpoint gets a
     # fresh plan id per call, but the pre-materialization analyzed plan
     # of a scan-chain input is call-stable.
-    bounds_key = (
-        spark.sparkContext.applicationId,
-        nn.semanticHash(),
-        value_col,
-        num_partitions,
-    )
+    plan_hash = nn.semanticHash()
     nn = _materialize_if_derived(nn)
 
     # VALUE-BANDED global rank, ONE shuffle.  The obvious plan —
@@ -222,29 +206,11 @@ def group_percentile_cont(
     # boundary probe is one approxQuantile job (GK sketch, driver gets
     # ~P doubles, accuracy only affects band balance, never correctness)
     # that runs at plan-CONSTRUCTION time — build-once/probe-many callers
-    # and the plan cache pay it once, like a broadcast build.  Bounds are
-    # additionally session-cached per (app, input plan, column, P) —
-    # repeat calls skip the probe job entirely (and a stale/colliding
-    # entry is still correct: bounds steer balance, not semantics).
-    bounds = _BOUNDS_IDX.get(bounds_key)
-    if bounds is None:
-        bounds = sorted(
-            {
-                b
-                for b in nn.select(
-                    F.col(value_col).cast("double").alias("_v")
-                ).stat.approxQuantile(
-                    "_v",
-                    [i / num_partitions for i in range(1, num_partitions)],
-                    0.01,
-                )
-                if b == b  # drop NaN boundaries (all-NaN / empty columns),
-                # matching the sibling guard in functions/rank.py — a NaN
-                # bound makes sorted(set(...)) order-unstable and the CASE
-                # chain non-monotone
-            }
-        )
-        bounded_put(_BOUNDS_IDX, bounds_key, bounds, _BOUNDS_IDX_MAX)
+    # and the plan cache pay it once, like a broadcast build; repeat
+    # calls over the same input plan skip it (``rank.band_bounds``).
+    bounds = band_bounds(
+        nn, F.col(value_col).cast("double"), num_partitions, plan_hash
+    )
     band: Column = F.lit(len(bounds))
     for i, b in reversed(list(enumerate(bounds))):
         band = F.when(F.col("_vd") <= F.lit(b), i).otherwise(band)

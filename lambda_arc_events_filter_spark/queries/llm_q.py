@@ -10,11 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from lambda_arc_events_filter_spark.cache import (
-    bless_resident,
-    bounded_put,
-    release_plans_for,
-)
+from lambda_arc_events_filter_spark.cache import session_artifact
 from lambda_arc_events_filter_spark.catalog import load, values_relation
 from lambda_arc_events_filter_spark.functions.exact import (
     round_int_ratio,
@@ -29,6 +25,7 @@ from lambda_arc_events_filter_spark.operators.multimodal import (
     synthesize_bmp,
     synthesize_wav,
 )
+from lambda_arc_events_filter_spark.queries.postings import build_postings_index
 from lambda_arc_events_filter_spark.queries.text_index import (
     tf_index,
     vocab_stats,
@@ -39,48 +36,40 @@ from lambda_arc_events_filter_spark.registry import register
 # Dedup family (B60, B61)
 # ---------------------------------------------------------------------------
 
-#: Shared corpus postings index: (applicationId, sf_dir) → localCheckpointed
-#: (_id, _blk, sk, _n) shingle-postings relation.  The inverted index is a
-#: CORPUS ARTIFACT every shingle-dedup query probes (exact Jaccard, MinHash
-#: LSH, capped LSH) — build-once/probe-many, the same split
-#: ``ivf_build_index`` uses on the embedding side and what a resident
-#: engine amortizes across its dedup passes.  Bounded: at most
-#: _POSTINGS_IDX_MAX entries (insertion order evicted first), so a
-#: long-lived session iterating over many sf_dirs cannot grow driver-side
-#: references without bound (the executor blocks themselves are released
-#: when the checkpointed DataFrame is dropped).
-_POSTINGS_IDX: dict[tuple[str, str], DataFrame] = {}
-_POSTINGS_IDX_MAX = 4
 
-
+# Shared corpus postings index: the localCheckpointed (_id, _blk, sk, _n)
+# shingle-postings relation.  The inverted index is a CORPUS ARTIFACT
+# every shingle-dedup query probes (exact Jaccard, MinHash LSH, capped
+# LSH) — build-once/probe-many, the same split ``_ivf_index`` uses on
+# the embedding side and what a resident engine amortizes across its
+# dedup passes.
 def _postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lambda_arc_events_filter_spark.queries.postings import (
-        build_postings_index,
-    )
-
-    return build_postings_index(
-        spark, sf_dir, _POSTINGS_IDX, F.col("lang"), _POSTINGS_IDX_MAX
+    return session_artifact(
+        spark, sf_dir, "postings",
+        lambda: build_postings_index(spark, sf_dir, F.col("lang")),
     )
 
 
-#: (applicationId, sf_dir) → localCheckpointed uncapped (_id, _n, minhash)
-#: signature relation — the second stored half of the MinHash index (the
-#: capped variant filters the signature INPUT, so it builds its own).
-_MINHASH_SIG_IDX: dict[tuple[str, str], DataFrame] = {}
-
-
+# Uncapped (_id, _n, minhash) signature relation — the second stored
+# half of the MinHash index (the capped variant filters the signature
+# INPUT, so it builds its own).
 def _minhash_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _MINHASH_SIG_IDX.get(key)
-    if sig is None:
+    def build() -> DataFrame:
         post = _postings_index(spark, sf_dir).drop("_blk")
-        sig = D.minhash_signatures(post).localCheckpoint()
-        bless_resident(sig)
-        bounded_put(
-            _MINHASH_SIG_IDX, key, sig, _POSTINGS_IDX_MAX,
-            on_evict=release_plans_for,
-        )
-    return sig
+        return D.minhash_signatures(post).localCheckpoint()
+
+    return session_artifact(spark, sf_dir, "minhash_signatures", build)
+
+
+# IVF index (centroids, unit corpus) over the embeddings, shared by
+# ``ann_ivf_topk`` and ``ann_recall_at_k``.
+def _ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    return session_artifact(
+        spark, sf_dir, "ivf",
+        lambda: S.ivf_build_index(load(spark, sf_dir, "embeddings")),
+    )
 
 
 @register(
@@ -390,9 +379,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     built once per session and cached — the query itself is probe-only,
     as it must be at 100 TB where the index is a persisted artifact."""
     e = load(spark, sf_dir, "embeddings")
-    idx = S.ivf_build_index(
-        e, cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings")
-    )
+    idx = _ivf_index(spark, sf_dir)
     return S.ivf_topk(e.filter(F.col("vec_id") < 5), k=5, nprobe=2, index=idx)
 
 
@@ -549,9 +536,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (a double sum can flip a shortlist tie).  Recall vs
     brute force is pinned in tests/test_llm.py."""
     e = load(spark, sf_dir, "embeddings")
-    idx = S.ivfpq_build_index(
-        e,
-        cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings-pq"),
+    idx = session_artifact(
+        spark, sf_dir, "ivfpq", lambda: S.ivfpq_build_index(e)
     )
     return S.ivfpq_topk(
         e.filter(F.col("vec_id") < 5), idx, k=5, nprobe=2, shortlist=50
@@ -2847,7 +2833,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     each path) is value-checked.
 
     Both paths share the probe set (vec_id < 20) and the session-cached
-    IVF index ``ann_ivf_topk`` builds (build-once/probe-many).  Exact
+    IVF index ``ann_ivf_topk`` probes (``_ivf_index``).  Exact
     side: corpus never shuffles, query side broadcasts, WindowGroupLimit
     caps per-query candidates (operators/similarity.brute_force_topk).
     Approx side: centroid table broadcasts, only probed cells score.
@@ -2861,10 +2847,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
     exact = S.brute_force_topk(q, e, k=5)
-    idx = S.ivf_build_index(
-        e, cache_key=(spark.sparkContext.applicationId, sf_dir, "embeddings")
-    )
-    approx = S.ivf_topk(q, k=5, nprobe=2, index=idx)
+    approx = S.ivf_topk(q, k=5, nprobe=2, index=_ivf_index(spark, sf_dir))
     hits = exact.select("query_id", "neighbor_id").join(
         approx.select(
             "query_id", "neighbor_id", F.lit(1).alias("hit")

@@ -61,9 +61,9 @@ _REGISTRY: dict[str, QuerySpec] = {}
 #:   dataset after the view is re-registered;
 #: - every RDD scan of the ANALYZED plan, subqueries included, is a
 #:   blessed session-resident index of this application
-#:   (``cache.bless_resident``).  Any other ``LogicalRDD``, such as a lazy
-#:   ``localCheckpoint(eager=False)`` or a ``createDataFrame``, holds
-#:   per-call data.
+#:   (``cache.session_artifact`` blesses them).  Any other
+#:   ``LogicalRDD``, such as a lazy ``localCheckpoint(eager=False)`` or a
+#:   ``createDataFrame``, holds per-call data.
 #:
 #: Bounded (``cache.bounded_put``): FIFO-evicted past ``_PLAN_CACHE_MAX``
 #: entries so a long-lived session over many sf_dirs cannot grow driver
@@ -71,8 +71,8 @@ _REGISTRY: dict[str, QuerySpec] = {}
 _PLAN_CACHE: dict[tuple[str, str, str], object] = {}
 _PLAN_CACHE_MAX = 1024
 
-# Coupled eviction: when a session index is evicted from its own bounded
-# cache, cache.release_plans_for drops every prepared plan of the same
+# Coupled eviction: when a dataset's session artifacts are evicted,
+# cache.release_plans_for drops every prepared plan of the same
 # (applicationId, sf_dir) — otherwise cached plans would pin the evicted
 # index's LogicalRDD (and its executor blocks) for the session lifetime.
 PLAN_CACHE_SINKS.append(_PLAN_CACHE)

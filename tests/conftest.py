@@ -36,13 +36,32 @@ def _slow_nodeids() -> frozenset[str]:
         return frozenset()
 
 
+#: How many collected items slow_tests.txt matched (unset: empty list).
+_SLOW_MATCHED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_nodeids()
     if not slow:
         return
+    matched = 0
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slow)
+            matched += 1
+    config.stash[_SLOW_MATCHED] = matched
+
+
+def pytest_report_collectionfinish(config, items):
+    """One header line when slow_tests.txt lists node ids but none of them
+    was collected: a stale list (renamed tests) silently empties the slow
+    tier and moves every slow test into the default run."""
+    if config.stash.get(_SLOW_MATCHED, None) == 0:
+        return (
+            f"slow_tests.txt: 0 of {len(_slow_nodeids())} listed node ids "
+            "match a collected test"
+        )
+    return None
 
 
 @pytest.fixture(scope="session")

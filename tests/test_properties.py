@@ -681,6 +681,66 @@ def test_q01_half_boundary_parity(spark, rows):
     assert compare_pandas_strict(spdf, dpdf) == []
 
 
+def test_star_join_half_cent_revenue_parity(spark):
+    """join_multiway_star's revenue agrees bit-for-bit between Spark and
+    the DuckDB oracle on a nation whose exact revenue total is a half
+    cent: 2.01 · (1 − 0.50) + 9 · 1.00 = 10.005.  The double sum is
+    10.004999999999999; ``round(x, 2)`` gives 10.0 in Spark
+    (decimal-string rounding) and 10.01 in DuckDB (binary rounding)."""
+    import datetime as dt
+    import tempfile
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lambda_arc_events_filter_spark.registry import specs
+    from lambda_arc_events_filter_spark.testing import compare_pandas_strict
+
+    # (returnflag, linestatus, price cents, discount cents, tax, qty)
+    rows = [("N", "O", 201, 50, 0, 1)] + [("N", "O", 100, 0, 0, 1)] * 9
+    dims = {
+        "region": {
+            "r_regionkey": pa.array([0], pa.int32()), "r_name": ["ASIA"],
+        },
+        "nation": {
+            "n_nationkey": pa.array([0], pa.int32()), "n_name": ["JAPAN"],
+            "n_regionkey": pa.array([0], pa.int32()),
+        },
+        "customer": {
+            "c_custkey": pa.array([1], pa.int64()), "c_name": ["c1"],
+            "c_nationkey": pa.array([0], pa.int32()), "c_acctbal": [0.0],
+            "c_mktsegment": ["BUILDING"],
+        },
+        "orders": {
+            "o_orderkey": pa.array(range(len(rows)), pa.int64()),
+            "o_custkey": pa.array([1] * len(rows), pa.int64()),
+            "o_orderstatus": ["O"] * len(rows),
+            "o_totalprice": [0.0] * len(rows),
+            "o_orderdate": pa.array(
+                [dt.datetime(1996, 6, 1)] * len(rows), pa.timestamp("us")
+            ),
+            "o_orderpriority": ["1-URGENT"] * len(rows),
+        },
+    }
+    spec = specs()["join_multiway_star"]
+    with tempfile.TemporaryDirectory() as tmpdir:
+        _write_lineitem(tmpdir, rows)
+        for name, cols in dims.items():
+            pq.write_table(pa.table(cols), f"{tmpdir}/{name}.parquet")
+        spdf = spec.fn(spark, tmpdir).toPandas()
+        con = duckdb.connect()
+        for name in ("lineitem", *dims):
+            con.execute(
+                f"CREATE VIEW {name} AS SELECT * FROM "
+                f"read_parquet('{tmpdir}/{name}.parquet')"
+            )
+        dpdf = con.sql(spec.oracle).df()
+        con.close()
+    assert list(spdf["revenue"]) == [10.01]
+    assert compare_pandas_strict(spdf, dpdf) == []
+
+
 @given(
     cases=st.lists(
         st.tuples(

@@ -1,8 +1,8 @@
-"""Session-cache invariants: the bounded driver-side caches behind the
-corpus indexes (postings, tf/lexicon, band bounds) must be build-once per
-(application, sf_dir) and FIFO-bounded — an unbounded cache is a driver
-leak on a long-lived session, and a cache that misses on repeat calls
-silently re-runs the index build it exists to amortize."""
+"""Session-cache invariants: the per-dataset artifacts
+(``cache.session_artifact``: corpus indexes, layout copies) must be
+build-once per (application, sf_dir) and FIFO-bounded — an unbounded
+cache is a driver leak on a long-lived session, and a cache that misses
+on repeat calls silently re-runs the build it exists to amortize."""
 
 from __future__ import annotations
 
@@ -196,17 +196,32 @@ def test_view_name_plans_are_never_cached(spark, sf_dir):
         assert key not in R._PLAN_CACHE, name
 
 
+def _alt_spellings(sf_dir: str) -> list[str]:
+    """Four alternate spellings of the fixture dir: distinct artifact
+    keys, all readable."""
+    import os
+
+    head, tail = os.path.dirname(sf_dir), os.path.basename(sf_dir)
+    spellings = [
+        sf_dir + "/",
+        sf_dir + "//",
+        f"{head}/./{tail}",
+        f"{head}/../{os.path.basename(head)}/{tail}",
+    ]
+    assert len(set(spellings) | {sf_dir}) == 5
+    return spellings
+
+
 def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     """Blessing-lifecycle adversarial path (VERDICT r8 ask #5): force a
-    blessed tf index out of its bound-4 cache through the REAL runtime
-    eviction path (four further bounded_put insertions — alternate path
+    blessed tf index out of the bound-4 artifact store through the REAL
+    runtime eviction path (four further datasets — alternate path
     SPELLINGS of the same fixture dir, distinct keys, all readable), then
     assert (a) every dependent prepared plan of that (app, sf_dir) is
     dropped with it — coupled eviction at runtime, not just the unit-level
     hook — and (b) the next query run rebuilds a fresh index and still
     value-matches its DuckDB oracle."""
-    import os
-
+    from lambda_arc_events_filter_spark import cache as C
     from lambda_arc_events_filter_spark import registry as R
     from lambda_arc_events_filter_spark.queries import text_index as TI
     from lambda_arc_events_filter_spark.testing import (
@@ -222,21 +237,13 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     spec.fn(spark, sf_dir).collect()
     spec.fn(spark, sf_dir)  # a first build may run the index build
     assert plan_key in R._PLAN_CACHE
-    idx_before = TI._TF_IDX[idx_key]
+    idx_before = C._ARTIFACTS[idx_key]["tf"]
 
-    head, tail = os.path.dirname(sf_dir), os.path.basename(sf_dir)
-    spellings = [
-        sf_dir + "/",
-        sf_dir + "//",
-        f"{head}/./{tail}",
-        f"{head}/../{os.path.basename(head)}/{tail}",
-    ]
-    assert len(set(spellings) | {sf_dir}) == 5
-    for alt in spellings:
+    for alt in _alt_spellings(sf_dir):
         TI.tf_index(spark, alt)
 
     # (a) index evicted AND its dependent prepared plans released
-    assert idx_key not in TI._TF_IDX
+    assert idx_key not in C._ARTIFACTS
     assert plan_key not in R._PLAN_CACHE
     assert not any(k[:2] == idx_key for k in R._PLAN_CACHE)
 
@@ -244,7 +251,7 @@ def test_blessed_index_eviction_end_to_end(spark, sf_dir):
     con = duck_connection(sf_dir)
     assert check_query(spec, spark, con, sf_dir) == []
     con.close()
-    assert TI._TF_IDX[idx_key] is not idx_before
+    assert C._ARTIFACTS[idx_key]["tf"] is not idx_before
     spec.fn(spark, sf_dir)  # the rebuild above ran index jobs
     assert plan_key in R._PLAN_CACHE
 
@@ -311,3 +318,64 @@ def test_build_that_writes_is_not_cached(spark, tmp_path):
         assert key not in R._PLAN_CACHE
     finally:
         R._PLAN_CACHE.pop(key, None)
+
+
+def test_layout_artifact_rewritten_after_four_other_datasets(spark, sf_dir):
+    """Layout copies share the dataset bound: once four other datasets
+    are used, the sorted events copy is evicted and written again."""
+    from lambda_arc_events_filter_spark.queries import sources_q
+
+    path = sources_q._sorted_events_path(spark, sf_dir)
+    assert sources_q._sorted_events_path(spark, sf_dir) == path
+    for alt in _alt_spellings(sf_dir):
+        sources_q._sorted_events_path(spark, alt)
+    assert sources_q._sorted_events_path(spark, sf_dir) != path
+
+
+def test_one_eviction_drops_every_artifact_and_plan_of_its_dataset(
+    spark, monkeypatch
+):
+    from lambda_arc_events_filter_spark import cache as C
+
+    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    app = spark.sparkContext.applicationId
+    sink: dict = {(app, "/sf/a", "q1"): object(), (app, "/sf/b", "q1"): object()}
+    monkeypatch.setattr(C, "PLAN_CACHE_SINKS", [sink])
+    C.session_artifact(spark, "/sf/a", "x", lambda: "/tmp/ax")
+    C.session_artifact(spark, "/sf/a", "y", lambda: "/tmp/ay")
+    for d in ("/sf/b", "/sf/c", "/sf/d"):
+        C.session_artifact(spark, d, "x", lambda: "/tmp/x")
+    assert set(C._ARTIFACTS[(app, "/sf/a")]) == {"x", "y"}
+    C.session_artifact(spark, "/sf/e", "x", lambda: "/tmp/ex")
+    assert (app, "/sf/a") not in C._ARTIFACTS
+    assert len(C._ARTIFACTS) == C._DATASETS_MAX
+    assert list(sink) == [(app, "/sf/b", "q1")]
+
+
+def test_artifact_blessing_covers_tuples_and_stores_paths_as_is(
+    spark, monkeypatch
+):
+    from lambda_arc_events_filter_spark import cache as C
+
+    monkeypatch.setattr(C, "_ARTIFACTS", {})
+    app = spark.sparkContext.applicationId
+
+    def scan_ids(df):
+        return C.rdd_scan_ids(df._jdf.queryExecution().logical())
+
+    a, b = spark.range(3).localCheckpoint(), spark.range(4).localCheckpoint()
+    assert not C.is_blessed(app, scan_ids(a) + scan_ids(b))
+    got = C.session_artifact(spark, "/sf/t", "pair", lambda: (a, b, "/tmp/t"))
+    assert got[0] is a and got[1] is b and got[2] == "/tmp/t"
+    assert C.is_blessed(app, scan_ids(a)) and C.is_blessed(app, scan_ids(b))
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return "/tmp/path"
+
+    assert C.session_artifact(spark, "/sf/t", "path", build) == "/tmp/path"
+    assert C.session_artifact(spark, "/sf/t", "path", build) == "/tmp/path"
+    assert C._ARTIFACTS[(app, "/sf/t")]["path"] == "/tmp/path"
+    assert calls == [1]
