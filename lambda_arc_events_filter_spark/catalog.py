@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -193,12 +194,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     the types bit-stable across engines.  Catalyst still gets full predicate
     pushdown / column pruning on top of this scan.
 
-    ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) in some fixture
-    generations, which Spark's parquet reader rejects outright
-    ([PARQUET_TYPE_ILLEGAL]).  When the footer says nanos we read it as raw
-    nanosecond longs (``spark.sql.legacy.parquet.nanosAsLong``) and convert
-    to TimestampType in the plan — lossless (values are µs-grain) and still
-    a single vectorized columnar scan.  Micros fixtures read directly.
+    ``events`` reads through the one timestamp-layout rule below
+    (``events_read_schema`` + ``with_event_ts``), like every other events
+    read path.
     """
     if table not in SCHEMAS:
         raise KeyError(f"unknown table {table!r}; known: {sorted(SCHEMAS)}")
@@ -212,12 +210,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def _events_ts_is_nanos(path: str) -> bool:
-    """Footer-only probe: is events.ts physically TIMESTAMP(NANOS)?
-
-    The fixture generator has shipped events.ts as both NANOS (round 1)
-    and MICROS (round 2) across regenerations; hardcoding either corrupts
-    timestamps by 1000x when the other shows up, so detect per file.
-    """
+    """Footer-only probe: is events.ts physically TIMESTAMP(NANOS)?"""
     try:
         import pyarrow.parquet as pq
 
@@ -227,26 +220,40 @@ def _events_ts_is_nanos(path: str) -> bool:
         return False
 
 
-def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if table == "events" and _events_ts_is_nanos(_ingested_path(sf_dir, table)):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        read_schema = StructType(
-            [
-                StructField("ts", LongType(), True)
-                if f.name == "ts"
-                else f
-                for f in SCHEMAS[table].fields
-            ]
-        )
-        import pyspark.sql.functions as F
+def events_read_schema(spark: SparkSession, path: str) -> StructType:
+    """Read schema for the events file at ``path``: the events ts-layout
+    rule, with ``with_event_ts``.  Fixtures ship ``ts`` as TIMESTAMP(MICROS)
+    or TIMESTAMP(NANOS), which Spark's parquet reader rejects; for NANOS,
+    ``ts`` reads as raw nanosecond longs (``nanosAsLong``, still one
+    vectorized scan) and ``with_event_ts`` converts it in the plan."""
+    if not _events_ts_is_nanos(path):
+        return SCHEMAS["events"]
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return StructType(
+        [
+            StructField("ts", LongType(), True) if f.name == "ts" else f
+            for f in SCHEMAS["events"].fields
+        ]
+    )
 
-        return (
-            spark.read.schema(read_schema)
-            .parquet(_ingested_path(sf_dir, table))
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            .select([f.name for f in SCHEMAS[table].fields])
-        )
-    return spark.read.schema(SCHEMAS[table]).parquet(_ingested_path(sf_dir, table))
+
+def with_event_ts(df: DataFrame) -> DataFrame:
+    """Turn a ``ts`` read as raw nanosecond longs (``events_read_schema``)
+    back into TimestampType, truncated to the µs, in one projection
+    that keeps the column order.  A TimestampType ``ts`` passes through
+    untouched, so callers need no layout flag."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    ts = F.timestamp_micros(F.expr("ts div 1000")).alias("ts")
+    return df.select([ts if c == "ts" else F.col(c) for c in df.columns])
+
+
+def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    path = _ingested_path(sf_dir, table)
+    if table != "events":
+        return spark.read.schema(SCHEMAS[table]).parquet(path)
+    read = spark.read.schema(events_read_schema(spark, path)).parquet(path)
+    return with_event_ts(read)
 
 
 def values_relation(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -73,7 +73,7 @@ def group_percentile_cont(
     quantiles: dict[str, float],
     extra_aggs: Sequence[Column] = (),
     num_partitions: int | None = None,
-    strategy: str | None = None,
+    strategy: str = "range",
     materialize: bool = False,
 ) -> DataFrame:
     """Exact interpolated per-group quantiles.
@@ -88,9 +88,8 @@ def group_percentile_cont(
     also evaluated-and-discarded them per band — see the in-body History
     note for why that fusion never actually shared work at runtime).
 
-    ``strategy`` (default from ``SPARK_GRAFT_PERCENTILE_STRATEGY``, else
-    ``group``) picks between two exact plans with identical output —
-    pytest asserts their equality:
+    ``strategy`` (default ``range``) picks between two exact plans with
+    identical output — pytest asserts their equality:
 
     - ``group``: one window partitioned by the group key.  Each group
       sorts in ONE task — fine while a group fits a task's sort budget,
@@ -104,7 +103,7 @@ def group_percentile_cont(
       stage constants now more than pay for).  ``range`` is therefore
       the DEFAULT (the cluster-sane-default polarity, like session.py's
       scan sizing); ``group`` remains selectable for tiny-relation
-      callers via the env var.
+      callers.
 
     ``materialize`` (range strategy only): localCheckpoint the
     |groups|·|bands|-row ``sizes`` aggregate, so its consumers (the
@@ -119,11 +118,7 @@ def group_percentile_cont(
     so it submits a job at build, and the cache never keeps a plan
     whose build ran a job.
     """
-    import os
-
     spark = df.sparkSession
-    if strategy is None:
-        strategy = os.environ.get("SPARK_GRAFT_PERCENTILE_STRATEGY", "range")
     if strategy not in ("group", "range"):
         raise ValueError(f"unknown percentile strategy {strategy!r}")
     keys = list(keys)

@@ -8,7 +8,7 @@ inside whole-stage codegen; the only shuffles are the final aggregations.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 #: tiny english-ish stopword list, shared verbatim with oracle SQL
 STOPWORDS = ("a", "the", "and", "of", "to")
@@ -79,36 +79,4 @@ def fingerprint_expr(text_col: str = "text") -> Column:
     return F.expr(
         f"aggregate(split({text_col}, ''), 0L,"
         f" (h, c) -> pmod(h * {FINGERPRINT_BASE} + ascii(c), {FINGERPRINT_P}))"
-    )
-
-
-def tfidf_from_tf(
-    tf: DataFrame,
-    n_total: DataFrame,
-    id_col: str = "doc_id",
-    df_counts: DataFrame | None = None,
-) -> DataFrame:
-    """TF-IDF scoring from a precomputed ``(id, term, tf)`` relation (e.g.
-    the session tf index, queries/text_index.py) — ``df`` per term is a
-    row count over it ((id, term) is unique), so the corpus is never
-    re-tokenized.  ``n_total`` is a 1-row (n_total) relation; pass a
-    precomputed ``(term, df)`` lexicon (text_index.vocab_stats) to skip
-    the df aggregation too."""
-    if df_counts is None:
-        df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        tf.join(F.broadcast(df_counts), "term")
-        .crossJoin(F.broadcast(n_total))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf")
-                * (
-                    F.log((1 + F.col("n_total")) / (1 + F.col("df")))
-                    + F.lit(1.0)
-                ),
-                6,
-            ),
-        )
-        .select(id_col, "term", "tf", "df", "tfidf")
     )

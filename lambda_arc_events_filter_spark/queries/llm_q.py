@@ -1203,9 +1203,9 @@ def ts_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
       (executed plan: FileScan 2 → 1, ReusedExchange 0 → 1,
       plans/r14/ts_user_similarity_*).  Value-identical because
       user_id is non-negative in every fixture (range(50) ≡ < 50;
-      oracle parity re-proven at sf0.01/sf0.1).  Measured interleaved
-      prepared-plan A/B (sf0.1, 14 pairs): new wins 14/14, median
-      0.415 → 0.336 s.  The duplicated work left above the shared
+      pinned by test_properties::test_events_user_id_is_non_negative).
+      Measured interleaved prepared-plan A/B (sf0.1, 14 pairs): new wins
+      14/14, median 0.415 → 0.336 s.  The duplicated work left above the shared
       exchange is the profile window over |users|×24 rows — scale-thin
       vs the fact pass it replaces.
     - The remaining full-population pass is semantically irreducible —

@@ -1,16 +1,25 @@
-"""Custom Python DataSource (Spark 4 DataSource API): a row-group-parallel
-parquet replay source registered as ``format("events_replay")``.
+"""Custom Python DataSources (Spark 4 DataSource API): the connector seam
+for feeds and destinations with no JVM implementation.
 
 Why this exists: the reference system's one external dependency is a
 Kinesis consumer; the Spark-4 Python DataSource API is how a connector
 with no JVM implementation (an internal feed, a bespoke archive format, a
 REST-paginated API) plugs into the engine while keeping Spark's
-parallelism model — ``partitions()`` declares the split points and each
-task reads only its split.  This implementation replays the fixture
-``events`` table one PARQUET ROW GROUP per input partition, streaming
-``pyarrow.RecordBatch``es (the Arrow fast path — no per-row Python
-objects), so the scan parallelizes exactly like the native reader and the
-whole downstream plan is ordinary Catalyst.
+parallelism model.  The module holds one connector per face:
+
+- ``events_replay`` (batch reader): replays the fixture ``events`` table
+  one PARQUET ROW GROUP per input partition — ``partitions()`` declares
+  the split points, each task reads only its split and streams
+  ``pyarrow.RecordBatch``es (the Arrow fast path — no per-row Python
+  objects), so the scan parallelizes exactly like the native reader and
+  the whole downstream plan is ordinary Catalyst.
+- ``events_stream_chunks`` (streaming reader): replays the same table in
+  fixed-size row chunks with cursor offsets, event time included.
+- ``jsonl_audit`` (batch writer): JSON-lines parts published by an
+  atomic driver-side manifest.
+
+Every source registers through ``register(spark, make_datasource)``,
+once per source name and Spark application.
 
 SERIALIZATION RULE (same as the repo's Python-UDF closure rule, enforced
 by the /tmp driver-sim): the DataSource classes are defined INSIDE a
@@ -21,10 +30,10 @@ process starts outside /root/repo — measured failure:
 PYTHON_DATA_SOURCE_ERROR on instance creation.  Closure-defined classes
 cloudpickle BY VALUE and carry their own code.
 
-The custom source is the extension seam, not a replacement: the native
+The custom sources are the extension seam, not a replacement: the native
 parquet reader stays the hot path everywhere else (pushdown, row-group
-skipping).  The oracle gate proves the source is transparent: reading
-through it equals reading the table natively.
+skipping).  The oracle gate proves the sources are transparent: reading
+through them equals reading the table natively.
 """
 
 from __future__ import annotations
@@ -73,9 +82,9 @@ def make_events_replay_datasource():
             # Spark's Arrow ingestion rejects timestamp[ns] columns
             # (UNSUPPORTED_ARROWTYPE) and does NOT coerce yielded batches
             # to the declared schema — so nanosecond timestamps are cast
-            # to their raw int64 here, matching the LongType the caller
-            # declares for ns-layout fixtures (the same dual-layout
-            # contract as catalog.load / events_stream).
+            # to their raw int64 here, matching the LongType that
+            # catalog.events_read_schema declares for ns-layout files
+            # (catalog.with_event_ts converts them on the Spark side).
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -106,23 +115,20 @@ def make_events_replay_datasource():
     return EventsReplayDataSource
 
 
-def make_events_replay_reader(options: dict):
-    """Reader instance for direct (test) use — same closure-built class."""
-    return make_events_replay_datasource()(options=options).reader(None)
+_REGISTERED: set[tuple[str, str]] = set()
 
 
-_REGISTERED: set[str] = set()
-
-
-def register_events_replay(spark) -> None:
-    """Idempotently register the source with this session."""
+def register(spark, make_datasource) -> None:
+    """Idempotently register the DataSource that ``make_datasource()``
+    builds with this session, once per (source name, application)."""
     if not PYDS_AVAILABLE:
         raise RuntimeError(
             "pyspark.sql.datasource API not available in this Spark"
         )
-    key = spark.sparkContext.applicationId
+    ds = make_datasource()
+    key = (ds.name(), spark.sparkContext.applicationId)
     if key not in _REGISTERED:
-        spark.dataSource.register(make_events_replay_datasource())
+        spark.dataSource.register(ds)
         _REGISTERED.add(key)
 
 
@@ -134,12 +140,18 @@ def make_events_stream_chunks_datasource():
     cursor-based feed connector (the reference's Kinesis consumer is
     exactly this: poll → records + next shard iterator).
 
+    Rows are ``(event_id, ts_us, event_type, value)``: the event time
+    ships as epoch MICROSECONDS (int64) so watermarks and event-time
+    windows work through the connector.  A ``timestamp[ns]`` column is
+    integer-divided by 1000, truncating sub-µs digits exactly like
+    ``catalog.with_event_ts``; other units cast to µs.
+
     API notes discovered the hard way (pinned by tests):
 
     - ``read(start)`` must return an **iterator of tuples** — the wrapper
       calls ``next()`` on it (a list fails) — that is also **picklable**
       (a generator fails: the prefetched chunk is pickled driver→executor),
-      so a list_iterator is the only shape satisfying both.
+      so it iterates already-materialized lists (here a zip of columns).
     - The simple-reader wrapper prefetches ONE chunk per ``latestOffset``
       poll, so ``availableNow`` stops after the first chunk; bounded
       replays drain with ``processAllAvailable`` (``run_to_memory``'s
@@ -170,17 +182,25 @@ def make_events_stream_chunks_datasource():
             return {"row": 0}
 
         def _slice(self, start_row: int, end_row: int):
+            import pyarrow as pa
+            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             tbl = pq.read_table(
-                self.path, columns=["event_id", "event_type", "value"]
-            )
-            tbl = tbl.slice(start_row, end_row - start_row)
+                self.path, columns=["event_id", "ts", "event_type", "value"]
+            ).slice(start_row, end_row - start_row)
+            ts = tbl.column("ts")
+            if ts.type.unit == "ns":
+                ts_us = pc.divide(ts.cast(pa.int64()), 1000)
+            else:
+                ts_us = ts.cast(pa.timestamp("us")).cast(pa.int64())
             return iter(
-                [
-                    (r["event_id"], r["event_type"], r["value"])
-                    for r in tbl.to_pylist()
-                ]
+                zip(
+                    tbl.column("event_id").to_pylist(),
+                    ts_us.to_pylist(),
+                    tbl.column("event_type").to_pylist(),
+                    tbl.column("value").to_pylist(),
+                )
             )
 
         def read(self, start):
@@ -202,24 +222,15 @@ def make_events_stream_chunks_datasource():
             return "events_stream_chunks"
 
         def schema(self) -> str:
-            return "event_id bigint, event_type string, value double"
+            return (
+                "event_id bigint, ts_us bigint, event_type string,"
+                " value double"
+            )
 
         def simpleStreamReader(self, schema) -> _ChunkStreamReader:
             return _ChunkStreamReader(self.options)
 
     return EventsStreamChunksDataSource
-
-
-def register_events_stream_chunks(spark) -> None:
-    """Idempotently register the streaming chunk source with this session."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("stream_chunks", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_events_stream_chunks_datasource())
-        _REGISTERED.add(key)
 
 
 def make_jsonl_audit_datasource():
@@ -305,98 +316,3 @@ def make_jsonl_audit_datasource():
             return _JsonlWriter(self.options)
 
     return JsonlAuditDataSource
-
-
-def register_jsonl_audit(spark) -> None:
-    """Idempotently register the audit sink with this session."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("jsonl_audit", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_jsonl_audit_datasource())
-        _REGISTERED.add(key)
-
-
-def make_events_stream_ts_datasource():
-    """Event-TIME variant of the chunk stream source: rows carry the
-    event timestamp as epoch MICROSECONDS (int64) so watermarks and
-    event-time windows work through the custom connector.  The reader
-    normalizes the fixture's ns/µs timestamp-unit drift (TESTDATA
-    regenerations alternate) by casting the arrow column to
-    timestamp[us] before extracting int64 — the same dual-layout
-    contract as catalog.load.  Same offset/pickling/drain contract as
-    ``EventsStreamChunksDataSource``.
-    """
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
-    class _TsChunkReader(SimpleDataSourceStreamReader):
-        def __init__(self, options: dict):
-            path = options.get("path")
-            if not path:
-                raise ValueError("events_stream_ts requires option 'path'")
-            self.path = path
-            self.chunk = int(options.get("chunk", "20000"))
-
-        def initialOffset(self):
-            return {"row": 0}
-
-        def _slice(self, start_row: int, end_row: int):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                self.path, columns=["event_id", "ts", "event_type", "value"]
-            )
-            ts = tbl.column("ts").cast(pa.timestamp("us")).cast(pa.int64())
-            tbl = tbl.set_column(1, pa.field("ts", pa.int64()), ts)
-            tbl = tbl.slice(start_row, end_row - start_row)
-            return iter(
-                [
-                    (r["event_id"], r["ts"], r["event_type"], r["value"])
-                    for r in tbl.to_pylist()
-                ]
-            )
-
-        def read(self, start):
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(self.path).metadata.num_rows
-            s = int(start["row"])
-            e = min(n, s + self.chunk)
-            return (self._slice(s, e), {"row": e})
-
-        def readBetweenOffsets(self, start, end):
-            return self._slice(int(start["row"]), int(end["row"]))
-
-    class EventsStreamTsDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "events_stream_ts"
-
-        def schema(self) -> str:
-            return (
-                "event_id bigint, ts_us bigint, event_type string,"
-                " value double"
-            )
-
-        def simpleStreamReader(self, schema) -> _TsChunkReader:
-            return _TsChunkReader(self.options)
-
-    return EventsStreamTsDataSource
-
-
-def register_events_stream_ts(spark) -> None:
-    """Idempotently register the event-time chunk source."""
-    if not PYDS_AVAILABLE:
-        raise RuntimeError(
-            "pyspark.sql.datasource API not available in this Spark"
-        )
-    key = ("stream_ts", spark.sparkContext.applicationId)
-    if key not in _REGISTERED:
-        spark.dataSource.register(make_events_stream_ts_datasource())
-        _REGISTERED.add(key)

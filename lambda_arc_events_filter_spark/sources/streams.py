@@ -20,54 +20,29 @@ import os
 import tempfile
 import uuid
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StructField, StructType
 
-from lambda_arc_events_filter_spark.catalog import SCHEMAS
+from lambda_arc_events_filter_spark.catalog import (
+    events_read_schema,
+    table_path,
+    with_event_ts,
+)
 
 
-def events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded DataFrame replaying the fixture ``events`` table.
 
-    Same ts-unit handling as the batch path (catalog.load): fixture
-    generations vary between TIMESTAMP(NANOS) and TIMESTAMP(MICROS), so
-    probe the footer; nanos reads as raw longs converted in-plan.
+    Reads through the same timestamp-layout rule as the batch path
+    (``catalog.events_read_schema`` + ``catalog.with_event_ts``).
     ``pathGlobFilter`` scopes the directory scan to the events file so the
     other nine tables in sf_dir are not picked up.
     """
-    from lambda_arc_events_filter_spark.catalog import (
-        _events_ts_is_nanos,
-        table_path,
-    )
-
-    nanos = _events_ts_is_nanos(table_path(sf_dir, "events"))
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        read_schema = StructType(
-            [
-                StructField("ts", LongType(), True) if f.name == "ts" else f
-                for f in SCHEMAS["events"].fields
-            ]
-        )
-    else:
-        read_schema = SCHEMAS["events"]
-    reader = (
-        spark.readStream.schema(read_schema)
+    schema = events_read_schema(spark, table_path(sf_dir, "events"))
+    return with_event_ts(
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = reader.parquet(sf_dir)
-    if nanos:
-        out = out.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select([f.name for f in SCHEMAS["events"].fields])
-    return out
 
 
 def run_to_memory(
@@ -120,14 +95,10 @@ def run_to_memory(
     # session default for prod-shaped unbounded sinks, where state outgrows
     # the heap.  Callers whose operator REQUIRES RocksDB
     # (transformWithStateInPandas rejects other providers) pass
-    # ``state_store="rocksdb"`` — the round-8 review found the old
-    # env-only switch silently clobbered a provider the caller had set on
-    # the session; the parameter makes the requirement explicit.
-    # SPARK_GRAFT_STATE_STORE=rocksdb remains the env-level override.
-    store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE", "memory")
+    # ``state_store="rocksdb"``.
     provider = (
         "RocksDBStateStoreProvider"
-        if store == "rocksdb"
+        if state_store == "rocksdb"
         else "HDFSBackedStateStoreProvider"
     )
     spark.conf.set(

@@ -10,6 +10,7 @@ as-of join totality, jaccard symmetry bounds.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
@@ -418,11 +419,13 @@ def test_custom_pyds_partitions_follow_row_groups(spark, sf_dir):
         custom_source_events_scan,
     )
     from lambda_arc_events_filter_spark.sources.pyds import (
-        make_events_replay_reader,
+        make_events_replay_datasource,
     )
 
     path = table_path(sf_dir, "events")
-    reader = make_events_replay_reader({"path": path})
+    reader = make_events_replay_datasource()(options={"path": path}).reader(
+        None
+    )
     n_rg = pq.ParquetFile(path).metadata.num_row_groups
     assert len(reader.partitions()) == n_rg
     out = custom_source_events_scan(spark, sf_dir)
@@ -433,14 +436,12 @@ def test_custom_pyds_partitions_follow_row_groups(spark, sf_dir):
 def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
     """Spark's Arrow ingestion rejects timestamp[ns] batches
     (UNSUPPORTED_ARROWTYPE) — the custom source must cast ns columns to
-    their raw int64 so the ns fixture layout reads through the same
-    LongType contract as events_stream."""
+    their raw int64, the LongType that catalog.events_read_schema
+    declares for the ns layout."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lambda_arc_events_filter_spark.sources.pyds import (
-        register_events_replay,
-    )
+    from lambda_arc_events_filter_spark.sources import pyds
 
     path = str(tmp_path / "ns_events.parquet")
     ts_ns = pa.array([1_700_000_000_000_000_001, 1_700_000_000_000_000_002],
@@ -452,7 +453,7 @@ def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
         coerce_timestamps=None,
     )
     assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
-    register_events_replay(spark)
+    pyds.register(spark, pyds.make_events_replay_datasource)
     got = (
         spark.read.format("events_replay")
         .schema("event_id long, ts long")
@@ -464,6 +465,24 @@ def test_custom_pyds_handles_nanos_timestamps(spark, tmp_path):
         (1, 1_700_000_000_000_000_001),
         (2, 1_700_000_000_000_000_002),
     ]
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_events_user_id_is_non_negative(sf_dir, scale):
+    """``llm_q.ts_user_similarity`` selects its query users with a join
+    against ``range(50)`` in place of ``user_id < 50``; the two agree only
+    while ``min(events.user_id) >= 0``.  Checked with pyarrow alone (no
+    Spark) on every fixture scale present."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = os.path.join(os.path.dirname(sf_dir), scale, "events.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {scale} fixture")
+    user_id = pq.read_table(path, columns=["user_id"]).column("user_id")
+    assert pc.min(user_id).as_py() >= 0
 
 
 def test_registry_window_reprioritizes_reds(tmp_path, monkeypatch):

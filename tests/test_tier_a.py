@@ -137,10 +137,13 @@ def test_ingest_compaction_path_is_lossless(spark, sf_dir, monkeypatch):
 
 def test_catalog_handles_both_ts_units(spark, tmp_path):
     """Fixture generations have shipped events.ts as TIMESTAMP(NANOS)
-    (round 1) and TIMESTAMP(MICROS) (round 2); the catalog probes the
-    footer per file.  Synthesize both layouts and assert identical
-    loaded values — the regression test for the 1000x-corruption bug the
-    round-2 regeneration exposed."""
+    and TIMESTAMP(MICROS); catalog owns the one rule that reads both.
+    Synthesize both layouts and read each through every events read
+    path — catalog.load, events_stream, the events_replay source and the
+    events_stream_chunks connector's reader — asserting identical
+    (event_id, ts) rows.  The ns layout carries one value with sub-µs
+    digits, which every path must round down to the µs like catalog does
+    (the connector's safe cast once raised ArrowInvalid on it)."""
     import datetime as dt
     import os
     import shutil
@@ -149,42 +152,78 @@ def test_catalog_handles_both_ts_units(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from lambda_arc_events_filter_spark import catalog
+    from lambda_arc_events_filter_spark.sources import pyds
+    from lambda_arc_events_filter_spark.sources.streams import (
+        events_stream,
+        run_to_memory,
+    )
 
     ts = [
         dt.datetime(2024, 1, 1, 10, 0, 0, 123456),
         dt.datetime(2024, 1, 2, 11, 30, 0, 654321),
     ]
-    cols = {
-        "event_id": pa.array([1, 2], pa.int64()),
-        "user_id": pa.array([7, 8], pa.int64()),
-        "event_type": pa.array(["view", "purchase"]),
-        "value": pa.array([1.5, 2.5], pa.float64()),
-        "props": pa.array(['{"k": 1}', '{"k": 2}']),
+    epoch = dt.datetime(1970, 1, 1)
+    epoch_us = [(t - epoch) // dt.timedelta(microseconds=1) for t in ts]
+    raw = {
+        "us": epoch_us + [1_700_000_000_000_000],
+        "ns": [u * 1000 for u in epoch_us] + [1_700_000_000_000_000_001],
     }
+    cols = {
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "user_id": pa.array([7, 8, 9], pa.int64()),
+        "event_type": pa.array(["view", "purchase", "view"]),
+        "value": pa.array([1.5, 2.5, 3.5], pa.float64()),
+        "props": pa.array(['{"k": 1}', '{"k": 2}', '{"k": 3}']),
+    }
+    pyds.register(spark, pyds.make_events_replay_datasource)
+
+    def rows(df):
+        return sorted(
+            (r.event_id, r.ts) for r in df.select("event_id", "ts").collect()
+        )
+
+    def chunk_rows(path):
+        chunks = pyds.make_events_stream_chunks_datasource()
+        reader = chunks(options={"path": path}).simpleStreamReader(None)
+        it, _ = reader.read(reader.initialOffset())
+        return sorted(
+            (eid, epoch + dt.timedelta(microseconds=us)) for eid, us, _, _ in it
+        )
+
     loaded = {}
     for unit in ("us", "ns"):
         d = str(tmp_path / f"sf_{unit}")
         os.makedirs(d)
+        path = os.path.join(d, "events.parquet")
         table = pa.table(
             {
                 "event_id": cols["event_id"],
-                "ts": pa.array(ts, pa.timestamp(unit)),
+                "ts": pa.array(raw[unit], pa.timestamp(unit)),
                 "user_id": cols["user_id"],
                 "event_type": cols["event_type"],
                 "value": cols["value"],
                 "props": cols["props"],
             }
         )
-        pq.write_table(
-            table,
-            os.path.join(d, "events.parquet"),
-            store_schema=False,  # force the physical unit into the footer
+        # store_schema=False forces the physical unit into the footer
+        pq.write_table(table, path, store_schema=False)
+        assert pq.read_schema(path).field("ts").type == pa.timestamp(unit)
+        replay = (
+            spark.read.format("events_replay")
+            .schema(catalog.events_read_schema(spark, path))
+            .option("path", path)
+            .load()
         )
-        df = catalog._load_uncached(spark, d, "events")
-        loaded[unit] = sorted(
-            (r.event_id, r.ts) for r in df.select("event_id", "ts").collect()
-        )
+        reads = {
+            "catalog.load": rows(catalog.load(spark, d, "events")),
+            "events_stream": rows(run_to_memory(events_stream(spark, d))),
+            "events_replay": rows(catalog.with_event_ts(replay)),
+            "events_stream_chunks": chunk_rows(path),
+        }
         shutil.rmtree(d)
+        for name, got in reads.items():
+            assert got == reads["catalog.load"], (unit, name, reads)
+        loaded[unit] = reads["catalog.load"]
     assert loaded["us"] == loaded["ns"], loaded
     assert loaded["us"][0][1] == ts[0]
 
